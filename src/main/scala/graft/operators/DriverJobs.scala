@@ -49,14 +49,20 @@ private[graft] object DriverJobs {
   /** Run `thunks` as concurrent driver jobs; return their results in
     * order. Every thunk runs to completion before this returns or
     * throws; on failures, the first (in sequence order) is rethrown
-    * after all siblings finished. A single thunk runs inline. */
+    * after all siblings finished, carrying every later failure as a
+    * suppressed exception. A single thunk runs inline. */
   def awaitAll[T](thunks: Seq[() => T]): Seq[T] = {
     if (thunks.sizeIs <= 1) return thunks.map(_())
     val done = thunks
       .map(t => Future(t())(pool))
       .map(f => Try(Await.result(f, Duration.Inf)))
-    done.collectFirst { case Failure(e) => throw e }
-    done.map(_.get)
+    done.collect { case Failure(e) => e } match {
+      case first +: later =>
+        // siblings' failures ride along instead of vanishing
+        later.foreach(e => if (e ne first) first.addSuppressed(e))
+        throw first
+      case _ => done.map(_.get)
+    }
   }
 
   /** Start one action on the pool for the overlap-then-await shape

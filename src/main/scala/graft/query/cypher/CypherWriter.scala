@@ -355,15 +355,18 @@ final class CypherWriter(
           else {
             val dir = s"${store.root}/${store.graphId}/.return_staging/" +
               s"r_${System.nanoTime()}"
+            // read back with the schema just written: inferring it
+            // would cost one more job for a known answer
             if (q.orderBy.nonEmpty) {
               // parquet read-back does not preserve write order — stamp
               // the sorted position and re-sort lazily on read
-              out.withColumn("__ord", monotonically_increasing_id())
-                .write.parquet(dir)
-              spark.read.parquet(dir).orderBy("__ord").drop("__ord")
+              val stamped = out.withColumn("__ord", monotonically_increasing_id())
+              stamped.write.parquet(dir)
+              spark.read.schema(stamped.schema).parquet(dir)
+                .orderBy("__ord").drop("__ord")
             } else {
               out.write.parquet(dir)
-              spark.read.parquet(dir)
+              spark.read.schema(out.schema).parquet(dir)
             }
           }
         case None =>

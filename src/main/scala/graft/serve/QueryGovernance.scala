@@ -28,7 +28,11 @@ object QueryGovernance {
     "RENAME TABLE", "RENAME COLUMN")
 
   /** Strip string literals and comments so keywords inside them don't
-    * misclassify (cypher_analyzer.py does the same before matching). */
+    * misclassify (cypher_analyzer.py does the same before matching).
+    * A stripped literal leaves [[LiteralPlaceholder]] — a VALUE, not
+    * blank space: after `WHERE c.id = '7'` the last significant
+    * character before a following `SET` must be the value, not the
+    * `=` that would make `SET` read as expression context. */
   private[serve] def stripLiterals(q: String): String = {
     val sb = new StringBuilder
     var i = 0
@@ -37,7 +41,7 @@ object QueryGovernance {
       val c = q(i)
       mode match {
         case ' ' =>
-          if (c == '\'' || c == '"') { mode = c; sb += ' ' }
+          if (c == '\'' || c == '"') { mode = c; sb += LiteralPlaceholder }
           else if (c == '/' && i + 1 < q.length && q(i + 1) == '*') { mode = '/'; i += 1 }
           else if (c == '/' && i + 1 < q.length && q(i + 1) == '/') { mode = '-'; i += 1 }
           else sb += c
@@ -69,6 +73,9 @@ object QueryGovernance {
   // must classify Write; map keys (`{set: 1}`) are caught by the
   // trailing-colon rule below instead.
   private val exprContextChars = ".$,(=<>+-*/|[:".toSet
+  // what a stripped string literal leaves behind: neither expression
+  // context nor a word, so it reads as the value it replaced
+  private val LiteralPlaceholder = '?'
 
   /** True iff any of `kws` occurs at a position where a clause can
     * begin: start of query, or after a pattern/expression terminator —

@@ -97,6 +97,18 @@ final class GraphStore(
   // head of a transactional table format: on Delta/Iceberg the
   // manifest is the commit log, retention is VACUUM, and [[nodeAt]]
   // is time travel.
+  //
+  // Every layout — append-only root, pointer-era generation dir,
+  // pk-hash buckets, and every time-travel generation — is read with
+  // the DECLARED schema (plus `file_id`), never an inferred one:
+  // parquet resolves the requested columns by name per file, so a
+  // table stored before a schema extension (installed onto an
+  // existing graph, as the reference composes extensions —
+  // schemas/manager.py:52) reads the new columns as typed nulls until
+  // its next rewrite materializes them, every layout yields the same
+  // column order, and planning a read runs no Spark job (schema
+  // inference is one footer-reading job per table — measured as most
+  // of a served read's compile time).
 
   private def pointerFile(path: String) = new java.io.File(path, "_current")
 
@@ -195,18 +207,13 @@ final class GraphStore(
       .foreach(v => manifestVersionFile(v).delete())
   }
 
-  /** The directory holding an UNBUCKETED table's ACTIVE data files
-    * (bucketed tables have one active dir per bucket — see
-    * [[readTableState]]). */
-  private def dataPath(path: String): String =
-    currentGenName(path).map(n => s"$path/$n").getOrElse(path)
-
-  /** The table's active generation dir name, or None for the
-    * legacy/append-only layout (generation 0) AND for bucketed tables
-    * (whose marker names no single dir). Resolution order: graph
-    * manifest, then the pre-manifest per-table `_current` pointer. */
-  private def currentGenName(path: String): Option[String] =
-    readManifest().get(tableKey(path)).orElse(legacyGenName(path))
+  /** The table's active generation dir name under manifest `m`, or
+    * None for the legacy/append-only layout (generation 0) AND for
+    * bucketed tables (whose marker names no single dir). Resolution
+    * order: graph manifest, then the pre-manifest per-table `_current`
+    * pointer. */
+  private def currentGenName(m: Map[String, String], path: String): Option[String] =
+    m.get(tableKey(path)).orElse(legacyGenName(path))
       .filterNot(_.startsWith("_bucketed-"))
 
   /** Current LOGICAL generation number: 0 = the legacy/append-only
@@ -346,46 +353,42 @@ final class GraphStore(
       .map(_.toString)
 
   /** Read a table's active state regardless of layout (append-only
-    * root, whole-table generation, or pk-hash buckets), conformed to
-    * the declared schema. `onlyBuckets` restricts a bucketed read to
-    * the named buckets — the point-write lever: the untouched (B − t)
-    * buckets are never listed, let alone scanned. */
+    * root, whole-table generation, or pk-hash buckets) with the
+    * declared schema — see the snapshot-generations note above.
+    * `onlyBuckets` restricts a bucketed read to the named buckets —
+    * the point-write lever: the untouched (B − t) buckets are never
+    * listed, let alone scanned. */
   private def readTableState(
       path: String, declared: StructType,
       onlyBuckets: Option[Seq[Int]] = None): DataFrame = {
     val m = readManifest()
-    val empty = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      withFileId(declared))
-    bucketStateIn(m, path) match {
+    val paths = bucketStateIn(m, path) match {
+      // ONE multi-path scan, not a per-bucket union: the plan stays a
+      // single FileScan — at a production bucket count a union of B
+      // scans is B listings and B-way planning for every read
       case Some((_, nB)) =>
-        val files = bucketDirsIn(m, path, nB)
+        bucketDirsIn(m, path, nB)
           .filter { case (b, _) => onlyBuckets.forall(_.contains(b)) }
           .flatMap { case (_, d) => dataFilePaths(d) }
-        // ONE multi-path scan with the DECLARED schema, not a
-        // per-bucket union: parquet resolves the requested schema
-        // by name per file, so buckets rewritten before a schema
-        // extension read the new column as nulls (the `evolved`
-        // semantics) while the plan stays a single FileScan — at a
-        // production bucket count a union of B scans is B listings
-        // and B-way planning for every read
-        if (files.isEmpty) empty
-        else spark.read.schema(withFileId(declared)).parquet(files: _*)
-      case None =>
-        if (!exists(path)) empty
-        else {
-          val dp = dataPath(path)
-          if (dp == path) evolved(spark.read.parquet(path), declared)
-          else {
-            // pointer-era unbucketed generation dir: same hidden-name
-            // story — read its files, not the `_gen-` dir
-            val files = dataFilePaths(new java.io.File(dp))
-            if (files.isEmpty) empty
-            else evolved(spark.read.parquet(files: _*), declared)
-          }
-        }
+      case None if !exists(path) => Nil
+      case None => currentGenName(m, path) match {
+        case None => Seq(path) // append-only root
+        // pointer-era unbucketed generation dir: same hidden-name
+        // story — read its files, not the `_gen-` dir
+        case Some(n) => dataFilePaths(new java.io.File(s"$path/$n"))
+      }
     }
+    scanDeclared(paths, declared)
   }
+
+  /** A scan of `paths` with the declared schema (plus `file_id`), or
+    * an empty frame of that schema when there is nothing to scan. */
+  private def scanDeclared(paths: Seq[String], declared: StructType): DataFrame =
+    if (paths.isEmpty)
+      spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        withFileId(declared))
+    else spark.read.schema(withFileId(declared)).parquet(paths: _*)
 
   /** Distinct buckets the keys of `keys` hash into, computed
     * DRIVER-SIDE over the collected key strings (keys are driver-small
@@ -422,21 +425,6 @@ final class GraphStore(
 
   def rel(tpe: String): DataFrame =
     readTableState(relPath(tpe), schema.rel(tpe).structType)
-
-  /** Schema evolution on read: a table stored BEFORE the declared
-    * schema grew (an extension installed onto an existing graph —
-    * the reference composes extensions the same way,
-    * schemas/manager.py:52) surfaces the new properties as typed
-    * nulls, so queries and SETs on them work immediately; the next
-    * rewrite materializes the column. Tables already matching the
-    * declaration pass through untouched (no projection in the plan). */
-  private def evolved(df: DataFrame, declared: StructType): DataFrame = {
-    val missing = withFileId(declared).fields
-      .filterNot(f => df.columns.contains(f.name))
-    if (missing.isEmpty) df
-    else df.select(col("*") +:
-      missing.map(f => lit(null).cast(f.dataType).as(f.name)).toIndexedSeq: _*)
-  }
 
   /** Logical generation a manifest value denotes — a bucketed marker's
     * counter or a `_gen-` name's number. */
@@ -488,7 +476,7 @@ final class GraphStore(
       require(hasData && generation <= currentGen(path),
         s"generation 0 of $what is not retained " +
           s"(current ${currentGen(path)}, retention keeps one previous)")
-      spark.read.parquet(path)
+      scanDeclared(Seq(path), declared)
     } else {
       val dirs = stateDirsAt(path, generation)
       require(dirs.nonEmpty && generation <= currentGen(path),
@@ -507,11 +495,7 @@ final class GraphStore(
           case _ => true
         }
       }
-      if (files.isEmpty)
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          withFileId(declared))
-      else spark.read.schema(withFileId(declared)).parquet(files: _*)
+      scanDeclared(files, declared)
     }
   }
 
@@ -625,9 +609,10 @@ final class GraphStore(
     val m = readManifest()
     bucketStateIn(m, path) match {
       case Some((g, nB)) => appendBucketed(observed, path, g, nB, m)
+      // unbucketed: the active generation dir, or the append-only root
       case None => observed.write.mode(SaveMode.Append)
         .option("parquet.block.size", GraphStore.RowGroupBytes)
-        .parquet(dataPath(path))
+        .parquet(currentGenName(m, path).fold(path)(n => s"$path/$n"))
     }
     obs.get.getOrElse("n", 0L) match {
       case l: java.lang.Long => l.longValue

@@ -20,6 +20,31 @@ class ServeSpec extends SparkTestBase {
     assert(QG.classify("MATCH (n) // SET later\nRETURN n LIMIT 5") === Read)
   }
 
+  test("classification: a string-literal predicate before a write clause stays Write") {
+    import QG.QueryKind._
+    // the stripped literal must read as a value: a blank left `=` as the
+    // last significant character, so the clause read as expression context
+    assert(QG.classify(
+      "MATCH (c:Customer) WHERE c.identifier = '7' SET c.acctbal = 1.0") === Write)
+    assert(QG.classify(
+      "MATCH (c:Customer) WHERE c.identifier = \"7\" SET c.acctbal = 1.0") === Write)
+    assert(QG.classify(
+      "MATCH (c:Customer) WHERE c.identifier = '7' REMOVE c.acctbal") === Write)
+    assert(QG.classify(
+      "MATCH (c:Customer) WHERE c.identifier = '7' DETACH DELETE c") === Write)
+    assert(QG.classify(
+      "MATCH (c:Customer) WHERE c.name IN ['a', 'b'] SET c.x = 1") === Write)
+    // the literal forms of reads stay reads, and keywords used as
+    // properties, aliases and map keys still do not classify
+    assert(QG.classify(
+      "MATCH (c:Customer) WHERE c.identifier = '7' RETURN c.set AS use") === Read)
+    assert(QG.classify("MATCH (c:C {set: 'x'}) RETURN c") === Read)
+    assert(QG.classify("MATCH (c:C) RETURN 'a' AS set") === Read)
+    assert(QG.classify("MATCH (c:C) RETURN c.set AS use") === Read)
+    assert(QG.classify("MATCH (c:C {set: 1}) RETURN c") === Read)
+    assert(QG.classify("MATCH (c) WHERE c.not DELETE c") === Write)
+  }
+
   test("shape analysis thresholds (small<=100, medium<=1000)") {
     import QG.ResultSize._
     assert(QG.analyze("MATCH (n) RETURN n LIMIT 50").estimatedSize === Small)

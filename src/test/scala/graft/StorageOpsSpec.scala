@@ -1,11 +1,18 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
 import graft.fixtures.AccountingFixture
 import graft.functions.IdFunctions
-import graft.schema.RoboledgerSchema
+import graft.query.cypher.CypherCompiler
+import graft.schema.{CustomSchemaJson, RoboledgerSchema}
 import graft.storage._
+import graft.views.TrialBalance
 
 /** Storage-adjacent parity surface: file staging, metrics, backup,
   * transactions, id generation. */
@@ -230,5 +237,164 @@ class StorageOpsSpec extends SparkTestBase {
     val c2 = Seq(("a", "b")).toDF("x", "y")
       .select(IdFunctions.contentId("fact", col("x"), col("y"))).collect()(0).getString(0)
     assert(c1 === c2 && c1.startsWith("fact_"))
+  }
+
+  // ---- declared-schema reads ----------------------------------------------
+
+  /** Spark jobs started on this thread while `body` runs. The listener
+    * bus delivers events in order but asynchronously, so a sentinel job
+    * in its own group marks the end of the counted window. */
+  private def jobsDuring(body: => Unit): Int = {
+    val group = s"graft-plan-${System.nanoTime()}"
+    val sentinel = s"$group-end"
+    val counted = new AtomicInteger(0)
+    val sawSentinel = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => counted.incrementAndGet()
+          case Some(`sentinel`) => sawSentinel.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "planning under test")
+      body
+      sc.setJobGroup(sentinel, "end of the counted window")
+      sc.parallelize(Seq(1), 1).count()
+      assert(sawSentinel.await(60, TimeUnit.SECONDS), "sentinel job never seen")
+      counted.get
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  /** The oracle source: every table read as plain parquet at its path,
+    * schema inferred from the files (append-only layout only). */
+  private final class PlainParquet(store: GraphStore) extends GraphSource {
+    def schema = store.schema
+    def node(label: String): DataFrame = spark.read.parquet(store.nodePath(label))
+    def rel(tpe: String): DataFrame = spark.read.parquet(store.relPath(tpe))
+  }
+
+  private val multiHop =
+    """MATCH (e:Entity)-[:ENTITY_HAS_TRANSACTION]->(t:Transaction)
+         -[:TRANSACTION_HAS_LINE_ITEM]->(li:LineItem)
+         -[:LINE_ITEM_RELATES_TO_ELEMENT]->(el:Element)
+       RETURN el.identifier AS id, count(li) AS n,
+         sum(li.debit_amount) AS debits, sum(li.credit_amount) AS credits
+       ORDER BY id"""
+
+  /** Rewrites `store` into the pointer-era layout: each table's files in
+    * a `_gen-1` dir named by a per-table `_current` pointer. */
+  private def toPointerLayout(store: GraphStore): Unit =
+    (store.schema.nodes.map(n => store.nodePath(n.name)) ++
+      store.schema.rels.map(r => store.relPath(r.name)))
+      .map(new java.io.File(_)).filter(_.exists).foreach { dir =>
+      val gen = new java.io.File(dir, "_gen-1")
+      gen.mkdirs()
+      dir.listFiles().filter(f => f.isFile && !f.getName.startsWith("_") &&
+        !f.getName.startsWith(".")).foreach { f =>
+        java.nio.file.Files.move(f.toPath, new java.io.File(gen, f.getName).toPath)
+      }
+      java.nio.file.Files.write(new java.io.File(dir, "_current").toPath,
+        "_gen-1".getBytes("UTF-8"))
+    }
+
+  test("persisted Cypher reads and views plan with zero Spark jobs in every layout") {
+    val r = Files.createTempDirectory("graft-zero-job").toString
+    val append = AccountingFixture.ingest(spark, r, "zj")
+    val expected = new CypherCompiler(new PlainParquet(append)).run(multiHop)
+      .collect().toSeq
+    assert(expected.size === 9)
+
+    val pointer = append.fork("zj-pointer")
+    toPointerLayout(pointer)
+    // a whole-table rewrite of every table (un-ingest of an absent
+    // file id) moves each into pk-hash buckets
+    val whole = append.fork("zj-whole")
+    RoboledgerSchema.schema.nodes.map(_.name)
+      .filter(l => new java.io.File(whole.nodePath(l)).exists)
+      .foreach(whole.deleteFileData(_, "absent"))
+    RoboledgerSchema.schema.rels.map(_.name)
+      .filter(t => new java.io.File(whole.relPath(t)).exists)
+      .foreach(whole.deleteRelFileData(_, "absent"))
+    assert(whole.generationOf("LineItem") === 1)
+    // then a point SET: one bucket of Element gets a newer generation
+    val point = whole.fork("zj-point")
+    assert(point.updateNodeProps("Element",
+      Seq(("elem1000", "sg")).toDF("__key", "substitution_group")) === 1L)
+    assert(point.generationOf("Element") === 2)
+
+    for ((layout, s) <- Seq("append-only" -> append, "pointer-era" -> pointer,
+        "whole-table rewrite" -> whole, "bucketed after point SET" -> point)) {
+      var frames = Seq.empty[DataFrame]
+      val jobs = jobsDuring {
+        frames = Seq(new CypherCompiler(s).run(multiHop),
+          TrialBalance(s, "2024-01-01", "2024-12-31"))
+        frames.foreach(_.queryExecution.executedPlan)
+      }
+      assert(jobs === 0, s"$layout: planning ran $jobs Spark job(s)")
+      val Seq(cypher, tb) = frames
+      assert(cypher.collect().toSeq === expected, layout)
+      assert(tb.select("element_id", "total_debits", "total_credits")
+        .collect().toSeq.sortBy(_.getString(0)) ===
+        expected.map(e => Row(e.getString(0), e.getDouble(2), e.getDouble(3))),
+        layout)
+    }
+    // time travel to the append-only generation plans without a job too
+    var gen0: DataFrame = null
+    assert(jobsDuring { gen0 = whole.nodeAt("Element", 0)
+      gen0.queryExecution.executedPlan } === 0)
+    assert(gen0.columns.toSeq === append.node("Element").columns.toSeq)
+  }
+
+  test("a table stored before a schema extension reads new columns as typed nulls, in declared order") {
+    val r = Files.createTempDirectory("graft-evolve-order").toString
+    def thing(extra: String) = CustomSchemaJson.parse(
+      s"""{"name":"evolve","version":"1.0",
+        "nodes":[{"name":"Thing","properties":[
+          {"name":"identifier","type":"STRING","is_primary_key":true},
+          $extra
+          {"name":"v","type":"INT64"}]}],
+        "relationships":[]}""")
+    val v1 = new GraphStore(spark, r, "g", thing(""))
+    v1.ingestNodes("Thing", Seq(("a", 1L), ("b", 2L)).toDF("identifier", "v"),
+      Some("f1"))
+    // the extension declares its columns BEFORE `v`: a read must follow
+    // the declaration, not the stored files' column order
+    val v2 = new GraphStore(spark, r, "g", thing(
+      """{"name":"note","type":"STRING"},{"name":"tags","type":"LIST<STRING>"},"""))
+    val declared = Seq("identifier" -> StringType, "note" -> StringType,
+      "tags" -> ArrayType(StringType), "v" -> LongType, "file_id" -> StringType)
+    def shape(df: DataFrame) = df.schema.fields.map(f => f.name -> f.dataType).toSeq
+    val before = v2.node("Thing")
+    assert(shape(before) === declared)
+    val a = before.filter($"identifier" === "a").head()
+    assert(a.isNullAt(1) && a.isNullAt(2) && a.getLong(3) === 1L &&
+      a.getString(4) === "f1")
+    // the first rewrite materializes the columns in the same order
+    assert(v2.updateNodeProps("Thing", Seq(("a", "hi")).toDF("__key", "note")) === 1L)
+    val after = v2.node("Thing")
+    assert(shape(after) === declared)
+    assert(after.orderBy("identifier").select("identifier", "note", "v")
+      .collect().toSeq === Seq(Row("a", "hi", 1L), Row("b", null, 2L)))
+  }
+
+  test("time travel to generation 0 returns the pre-rewrite rows") {
+    val r = Files.createTempDirectory("graft-gen0").toString
+    val st = AccountingFixture.ingest(spark, r, "tt")
+    val before = st.node("Element").collect().toSet
+    assert(st.generationOf("Element") === 0)
+    st.updateNodeProps("Element", Seq(("elem1000", "Till")).toDF("__key", "name"))
+    assert(st.generationOf("Element") === 1)
+    assert(st.node("Element").filter($"identifier" === "elem1000")
+      .select("name").as[String].head() === "Till")
+    val gen0 = st.nodeAt("Element", 0)
+    assert(gen0.columns.toSeq === st.node("Element").columns.toSeq)
+    assert(gen0.collect().toSet === before)
   }
 }
